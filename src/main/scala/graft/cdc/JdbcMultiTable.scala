@@ -3,7 +3,6 @@ package graft.cdc
 import java.sql.Connection
 
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.types._
@@ -17,13 +16,15 @@ import org.apache.spark.sql.types._
   * `rowSchema` (ANSI types, key column PRIMARY KEY), and each
   * micro-batch slice reduces to per-key summaries whose winning image
   * is projected to TYPED columns in Spark (one executor-side
-  * `from_json` + cast per surviving key — the same read-edge projection
-  * [[MultiTable.readTable]] uses) before the per-partition
-  * transaction binds them. Statement shapes, the three-phase
-  * `executeBatch` engine, created_at preservation (the UPDATE never
-  * touches the column), and the (target, epoch, partition) exactly-once
-  * markers are [[JdbcReplica]]'s, reused verbatim — every ordering and
-  * idempotency argument there carries over per table.
+  * `from_json` + cast per surviving key — [[MultiTable.typedColumns]],
+  * the read-edge projection of [[MultiTable.readTable]]) before the
+  * per-partition transaction binds them. The summaries are
+  * [[SummaryFormat.Generic]]'s fold, the one every replica runs. The
+  * three-phase `executeBatch` engine ([[JdbcReplica.applyOps]]) and the
+  * (target, epoch, partition) exactly-once markers are [[JdbcReplica]]'s;
+  * created_at preservation holds because the UPDATE never touches the
+  * column — every ordering and idempotency argument there carries over
+  * per table.
   *
   * Like the single-table JDBC sink (and unlike the summary-fold
   * replicas), this applies destructively and requires micro-batches in
@@ -128,36 +129,20 @@ object JdbcMultiTable {
 
   /** Per-key summaries of one table's batch slice, projected to typed
     * columns + action flags — the executor-side decode that keeps the
-    * JDBC partition loop free of JSON work. */
+    * JDBC partition loop free of JSON work. The slice is shuffled on
+    * `key` at a FIXED width before [[SummaryFormat.summarize]]: the
+    * (epoch, partition) markers need stable partition ids across a
+    * replay. */
   private[graft] def typedSummaries(slice: DataFrame, spec: TableSpec,
-      parallelism: Int): DataFrame = {
-    val byKey = Window.partitionBy("key")
-    val afterD = col("lsn") > coalesce(col("last_d_lsn"), lit(Long.MinValue))
-    val summarized = slice
-      .repartition(parallelism, col("key"))
-      .withColumn("last_d_lsn",
-        max(when(col("action") === "D", col("lsn"))).over(byKey))
-      .groupBy("key")
-      .agg(
-        max(when(col("action") =!= "D" && afterD,
-          struct(col("lsn"), col("img")))).as("last_img"),
-        min(when(col("action") === "I" && afterD,
-          struct(col("lsn"), col("created_at")))).as("first_ins"),
-        max(col("last_d_lsn")).as("last_d_lsn"))
-    val m = from_json(col("last_img.img"),
-      MapType(StringType, StringType)).as("m")
-    summarized
-      .select(col("key"), m, col("first_ins.created_at").as("__cat"),
+      parallelism: Int): DataFrame =
+    SummaryFormat.Generic.summarize(slice.repartition(parallelism, col("key")))
+      .select(col("key"), MultiTable.imageMap,
+        col("first_ins.created_at").as("__cat"),
         col("last_img").isNotNull.as("has_img"),
         col("first_ins").isNotNull.as("has_ins"),
         col("last_d_lsn").isNotNull.as("has_del"))
-      .select(spec.rowSchema.fields.map { f =>
-        if (f.name == spec.keyCol) col("key").cast(f.dataType).as(f.name)
-        else if (spec.createdAtCol.contains(f.name))
-          col("__cat").cast(f.dataType).as(f.name)
-        else element_at(col("m"), f.name).cast(f.dataType).as(f.name)
-      }.toSeq ++ Seq(col("has_img"), col("has_ins"), col("has_del")): _*)
-  }
+      .select(MultiTable.typedColumns(spec) ++
+        Seq(col("has_img"), col("has_ins"), col("has_del")): _*)
 
   /** Apply one micro-batch of PARSED generic changes to every declared
     * table's SQL target — per table, one summary job feeding
@@ -193,9 +178,7 @@ object JdbcMultiTable {
             idx: Int, dt: DataType): Unit =
           if (r.isNullAt(idx)) ps.setNull(at, jdbcType(dt))
           else ps.setObject(at, r.get(idx))
-        typedSummaries(
-            parsed.filter(col("tbl") === spec.table).drop("tbl"),
-            spec, parallelism)
+        typedSummaries(MultiTable.sliceOf(parsed, spec), spec, parallelism)
           .foreachPartition { (rows: Iterator[Row]) =>
             val buf = rows.toArray
             if (buf.nonEmpty) {

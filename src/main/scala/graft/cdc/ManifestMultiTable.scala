@@ -1,59 +1,44 @@
 package graft.cdc
 
-import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
 /** Multi-table replication under the OBJECT-STORE commit protocol —
   * [[MultiTable]]'s fan-out running on [[ManifestReplica]]'s manifest
-  * machinery instead of directory renames, so the full generalization
-  * matrix closes: {single, multi} × {rename, manifest, state-store,
-  * JDBC} all share one summary algebra.
+  * core instead of directory renames.
   *
   * Each declared table is its own manifest root at `<root>/<table>/` —
   * per-table commit streams, per-table time travel and gc, no
   * cross-table coupling in the commit path (exactly how a table format
-  * deploys: one log per table). ALL commit-protocol primitives are
-  * reused from [[ManifestReplica]] verbatim (versioned fresh-key
-  * manifests, exclusive-create CAS claims, the per-replica commit lock,
-  * retention-aware [[ManifestReplica.gc]], history trim); only the
-  * summary schema (generic key + img-as-JSON, [[MultiTable]]'s) and the
-  * final typed projection differ, so every crash-window and concurrency
-  * argument in the ManifestReplica header carries over unchanged. */
+  * deploys: one log per table). Every storage operation is
+  * [[ManifestReplica]]'s own per-table core — the trigger body
+  * ([[ManifestReplica.applyDelta]]), fold ([[ManifestReplica.compactWith]]),
+  * read ([[ManifestReplica.foldAt]]), snapshot, vacuum and change feed —
+  * called with [[SummaryFormat.Generic]]; only parsing, the presence
+  * check and the typed projection ([[MultiTable]]'s) live outside it, so
+  * every crash-window and concurrency argument in the ManifestReplica
+  * header holds per table. */
 object ManifestMultiTable {
-  import Replicate.{BucketCol, check, combineSummaries}
-  import MultiTable.{MtBaseSchema, MtDeltaSchema}
-  import ManifestReplica.{Manifest, checkMod, commitUpdate, lockFor,
-    placeBuckets, readManifest, writingTo}
-
-  private def fsOf(spark: SparkSession, dir: String): (FileSystem, Path) = {
-    val p = new Path(dir)
-    (p.getFileSystem(spark.sparkContext.hadoopConfiguration), p)
-  }
-
-  private def tableDir(root: String, spec: TableSpec): String =
-    s"$root/${spec.table}"
+  import MultiTable.{projectTyped, sliceOf, tableDir}
+  private val Generic = SummaryFormat.Generic
 
   /** Bulk-load one table's initial state — a full-replace manifest
-    * commit ([[ManifestReplica.snapshot]]'s shape over the generic
-    * schema). */
+    * commit ([[ManifestReplica.snapshotWith]]). */
   def snapshot(spark: SparkSession, rows: DataFrame, root: String,
       spec: TableSpec,
       numBuckets: Int = MultiTable.DefaultNumBuckets): Unit =
-    ManifestReplica.snapshotWith(spark, tableDir(root, spec), numBuckets,
-      MultiTable.rowsAsMtSummaries(rows, spec),
-      pmod(hash(col("key")), lit(numBuckets)))
+    ManifestReplica.snapshotWith(spark, Generic, tableDir(root, spec),
+      numBuckets, MultiTable.rowsAsMtSummaries(rows, spec))
 
   /** Apply one micro-batch of PARSED generic changes to every declared
-    * table's manifest replica: per table, one O(batch-slice) summary →
-    * delta placement → single manifest commit; replayed epochs are
-    * no-ops exactly as in [[ManifestReplica.applyBatch]]. Tables absent
-    * from the batch are skipped entirely (see
-    * [[MultiTable.presentTables]]) — critically here, because an empty
-    * per-trigger commit would burn a manifest version and trim an idle
-    * table's retained time-travel/changes window down to the last ~4
-    * triggers of wall-clock regardless of traffic (r6 review). */
+    * table's manifest replica: [[ManifestReplica.applyDelta]] per present
+    * table, with the synchronous fold; replayed epochs are no-ops
+    * exactly as in [[ManifestReplica.applyBatch]]. Tables absent from
+    * the batch are skipped entirely (see [[MultiTable.presentTables]]) —
+    * critically here, because an empty per-trigger commit would burn a
+    * manifest version and trim an idle table's retained
+    * time-travel/changes window down to the last ~4 triggers of
+    * wall-clock regardless of traffic (r6 review). */
   def applyBatch(spark: SparkSession, parsed: DataFrame, root: String,
       specs: Seq[TableSpec], batchId: Long,
       numBuckets: Int = MultiTable.DefaultNumBuckets,
@@ -62,153 +47,47 @@ object ManifestMultiTable {
     try {
       val present = MultiTable.presentTables(parsed)
       specs.filter(sp => present.contains(sp.table)).foreach { spec =>
-      val dir = tableDir(root, spec)
-      val (fs, rootP) = fsOf(spark, dir)
-      // whole per-table body — pre-check included — shared vs an
-      // exclusive truncate (see ManifestReplica.applyBatch)
-      val committed = Replicate.shared(dir) {
-        val (_, m0) = readManifest(fs, rootP)
-        checkMod(m0, numBuckets, "applyBatch")
-        if (batchId <= m0.watermark || m0.deltas.contains(batchId)) m0
-        else {
-          val tmp = new Path(rootP, s"delta/.tmp-$batchId")
-          writingTo(tmp) {
-          fs.delete(tmp, true)
-          MultiTable.summarizeMt(
-              parsed.filter(col("tbl") === spec.table).drop("tbl"),
-              numBuckets)
-            .write.mode(SaveMode.Overwrite).parquet(tmp.toString)
-          lockFor(rootP).synchronized {
-            val dst = new Path(rootP, s"delta/batch=$batchId")
-            fs.delete(dst, true)
-            check(fs.rename(tmp, dst), s"place delta $dst")
-            commitUpdate(fs, rootP)(m =>
-              if (batchId <= m.watermark || m.deltas.contains(batchId))
-                None
-              else {
-                checkMod(m, numBuckets, "applyBatch")
-                Some(m.copy(deltas = m.deltas + batchId,
-                  mod = if (m.mod == 0) numBuckets else m.mod))
-              })
-          }
-          }
-        }
-      }
-      // same gate as ManifestReplica.applyBatch (r6 review: without it
-      // a trigger's compact could race a vacuum's rewrite — both
-      // computing gen+1 from the same manifest and clobbering each
-      // other's stage dir — or re-commit pre-vacuum tombstones from a
-      // base read that predates the rewrite)
-      if (committed.deltas.size >= compactEvery &&
-          !ManifestReplica.lifecycleBusy(dir))
-        compact(spark, dir, numBuckets)
+        ManifestReplica.applyDelta(spark, Generic, sliceOf(parsed, spec),
+          tableDir(root, spec), numBuckets, batchId, compactEvery,
+          compactAsync = false)
       }
     } finally parsed.unpersist()
   }
 
   /** Incremental fold of one table's pending deltas into new
-    * generations of only the buckets they touch —
-    * [[ManifestReplica.compact]] over the generic schema. */
+    * generations of only the buckets they touch. */
   def compact(spark: SparkSession, dir: String,
       numBuckets: Int = MultiTable.DefaultNumBuckets): Unit =
-      ManifestReplica.foldLock(dir).synchronized {
-    val (fs, rootP) = fsOf(spark, dir)
-    val (_, m) = readManifest(fs, rootP)
-    checkMod(m, numBuckets, "compact")
-    if (m.deltas.isEmpty) return
-    val deltas = spark.read.schema(MtDeltaSchema)
-      .parquet(m.deltas.toSeq.sorted.map(m.deltaDir(dir, _)): _*)
-    val touched = deltas.select(BucketCol).distinct()
-      .collect().map(_.getInt(0)).toSeq.sorted
-    val baseTouched = {
-      val existing = touched.filter(m.buckets.contains)
-      if (existing.isEmpty)
-        spark.createDataFrame(
-          spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-          MtBaseSchema)
-      else spark.read.schema(MtBaseSchema)
-        .parquet(existing.map(m.bucketDir(dir, _)): _*)
-    }
-    val gen = m.gen + 1
-    val merged = combineSummaries(
-      baseTouched
-        .withColumn(BucketCol, pmod(hash(col("key")), lit(numBuckets)))
-        .select(MtDeltaSchema.fieldNames.map(col).toSeq: _*)
-        .unionAll(deltas.select(MtDeltaSchema.fieldNames.map(col).toSeq: _*)),
-      Seq(BucketCol, "key"), width = Some(touched.size.max(1)))
-    val stage = new Path(rootP, s".stage-g$gen")
-    writingTo(stage) {
-    fs.delete(stage, true)
-    merged.write.mode(SaveMode.Overwrite).partitionBy(BucketCol)
-      .parquet(stage.toString)
-    lockFor(rootP).synchronized {
-      val moved = placeBuckets(fs, rootP, stage, gen)
-      val consumed = m.deltas
-      commitUpdate(fs, rootP) { cur =>
-        checkMod(cur, numBuckets, "compact")
-        Some(Manifest(cur.gen max gen, cur.watermark max consumed.max,
-          cur.buckets ++ moved.map(_ -> gen), cur.deltas -- consumed,
-          mod = numBuckets))
-      }
-    }
-    }
-      }
-
-  /** Fold base ∪ pending deltas exactly as a given manifest names
-    * them — shared by the current read and time travel. */
-  private def foldAt(spark: SparkSession, dir: String, m: Manifest)
-      : DataFrame = {
-    val base =
-      if (m.buckets.isEmpty)
-        spark.createDataFrame(
-          spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-          MtBaseSchema)
-      else spark.read.schema(MtBaseSchema)
-        .parquet(m.buckets.keys.toSeq.sorted.map(m.bucketDir(dir, _)): _*)
-    if (m.deltas.isEmpty) base
-    else {
-      val deltas = spark.read.schema(MtDeltaSchema)
-        .parquet(m.deltas.toSeq.sorted.map(m.deltaDir(dir, _)): _*)
-        .select(MtBaseSchema.fieldNames.map(col).toSeq: _*)
-      combineSummaries(base.unionAll(deltas), Seq("key"))
-    }
-  }
+    ManifestReplica.compactWith(spark, Generic, dir, numBuckets)
 
   /** Merge-on-read typed view of one table through its newest
     * manifest. */
   def readTable(spark: SparkSession, root: String, spec: TableSpec)
       : DataFrame = {
     val dir = tableDir(root, spec)
-    val (fs, rootP) = fsOf(spark, dir)
-    val (_, m) = readManifest(fs, rootP)
-    MultiTable.projectTyped(foldAt(spark, dir, m), spec)
+    val (fs, rootP) = Replicate.fsOf(spark, dir)
+    val (_, m) = ManifestReplica.readManifest(fs, rootP)
+    projectTyped(ManifestReplica.foldAt(spark, Generic, dir, m), spec)
   }
 
   /** Time travel for one table — [[ManifestReplica.readReplicaAt]]'s
-    * contract over the generic schema (per-table manifest roots make
-    * retention per-table by construction: a hot table's commits never
-    * trim an idle table's window). */
+    * contract (per-table manifest roots make retention per-table by
+    * construction: a hot table's commits never trim an idle table's
+    * window). */
   def readTableAt(spark: SparkSession, root: String, spec: TableSpec,
       version: Long): DataFrame = {
     val dir = tableDir(root, spec)
-    val (fs, rootP) = fsOf(spark, dir)
-    val m =
-      try ManifestReplica.readManifestAt(fs, rootP, version)
-      catch { case _: java.io.FileNotFoundException =>
-        throw new IllegalArgumentException(
-          s"manifest v$version not retained (have ${
-            ManifestReplica.versions(spark, dir)})")
-      }
-    MultiTable.projectTyped(foldAt(spark, dir, m), spec)
+    projectTyped(ManifestReplica.foldAt(spark, Generic, dir,
+      ManifestReplica.manifestAt(spark, dir, version)), spec)
   }
 
   /** Per-table change feed — [[ManifestReplica.changesSince]]'s
     * contract (gap-checked delta range as generic summary rows, one
-    * row per key per batch) through the shared implementation. */
+    * row per key per batch). */
   def changesSince(spark: SparkSession, root: String, spec: TableSpec,
       sinceVersion: Long): DataFrame =
-    ManifestReplica.changesSinceWith(spark, tableDir(root, spec),
-      sinceVersion, MtBaseSchema, MtDeltaSchema)
+    ManifestReplica.changesSinceWith(spark, Generic, tableDir(root, spec),
+      sinceVersion)
 
   /** Committed manifest versions of one table (time-travel targets). */
   def versions(spark: SparkSession, root: String, spec: TableSpec)
@@ -229,20 +108,15 @@ object ManifestMultiTable {
     ManifestReplica.truncate(spark, tableDir(root, spec))
 
   /** Physically remove one table's tombstones —
-    * [[ManifestReplica.vacuum]] over the generic schema (the privacy-
-    * delete / reclamation pass; same precondition: the source can no
-    * longer deliver lsns below the tombstones' delete lsns). Pending
-    * deltas fold first; every live bucket is rewritten one generation
-    * up with only its alive keys; like the single-table vacuum this
-    * deliberately collapses the table's time-travel window before
+    * [[ManifestReplica.vacuumWith]] (the privacy-delete / reclamation
+    * pass; same precondition: the source can no longer deliver lsns
+    * below the tombstones' delete lsns). Like the single-table vacuum
+    * this deliberately collapses the table's time-travel window before
     * sweeping (it exists to remove bytes). */
   def vacuum(spark: SparkSession, root: String, spec: TableSpec,
-      numBuckets: Int = MultiTable.DefaultNumBuckets): Unit = {
-    val dir = tableDir(root, spec)
-    ManifestReplica.vacuumWith(spark, dir, numBuckets, MtBaseSchema,
-      pmod(hash(col("key")), lit(numBuckets)),
-      () => compact(spark, dir, numBuckets))
-  }
+      numBuckets: Int = MultiTable.DefaultNumBuckets): Unit =
+    ManifestReplica.vacuumWith(spark, Generic, tableDir(root, spec),
+      numBuckets)
 
   /** The continuous multi-table pipeline on the manifest protocol:
     * one change-log stream → `parser` once per trigger (wal2json

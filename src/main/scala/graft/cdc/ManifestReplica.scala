@@ -4,6 +4,7 @@ import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{Column, DataFrame, Dataset, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.types.StructType
 
 /** Object-store commit protocol for the CDC replica — the deployment
   * shape [[Replicate]]'s header points at for S3-class stores, made
@@ -29,7 +30,7 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
   *   _manifest.v<N>        one line-oriented commit record per version;
   *                         max N wins, last [[ManifestHistory]] retained
   *   data/b<bkt>-g<gen>/   one parquet dir per bucket GENERATION
-  *   delta/batch=<id>/     per-trigger summary deltas (Replicate schema)
+  *   delta/batch=<id>/     per-trigger summary deltas ([[SummaryFormat]])
   * }}}
   *
   * Scale notes (the 100 TB story):
@@ -80,12 +81,19 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
   *
   * Schema evolution: fixed at compile time by design, same documented
   * decision as [[Replicate]] — widening deployments use the generic
-  * declared-schema twin ([[ManifestMultiTable]] with one [[TableSpec]]),
-  * whose JSON image map makes a widened schema a read-side change. */
+  * declared-schema path ([[ManifestMultiTable]] with one [[TableSpec]]),
+  * whose JSON image map makes a widened schema a read-side change.
+  *
+  * The manifest trigger body, fold and read are written ONCE over a
+  * [[SummaryFormat]] — [[applyDelta]], [[compactWith]] and [[foldAt]],
+  * beside [[snapshotWith]], [[vacuumWith]] and [[changesSinceWith]].
+  * This object's typed API calls them with [[SummaryFormat.Person]];
+  * [[ManifestMultiTable]] calls them per table with
+  * [[SummaryFormat.Generic]]. */
 object ManifestReplica {
-  import Replicate.{BucketCol, BaseSchema, DeltaSchema, check,
-    combineSummaries, projectAlive, rowsAsSummaries, summarizeBucketed,
-    withRowFilter}
+  import Replicate.{BucketCol, check, combineSummaries, emptyFrame, fsOf,
+    projectAlive, rowsAsSummaries, withRowFilter}
+  private val Person = SummaryFormat.Person
 
   /** One committed replica state. `gen` is the high-water generation
     * counter (monotone across commits, never reused — so a crashed
@@ -118,11 +126,6 @@ object ManifestReplica {
     * Production tunes this to the retention the deployment owes its
     * readers (the Delta/Iceberg VACUUM trade). */
   val ManifestHistory = 4
-
-  private def fsOf(spark: SparkSession, dir: String): (FileSystem, Path) = {
-    val p = new Path(dir)
-    (p.getFileSystem(spark.sparkContext.hadoopConfiguration), p)
-  }
 
   /** Committed manifest versions on disk, ascending (history depth =
     * [[ManifestHistory]] until [[gc]]/[[vacuum]] prune). */
@@ -415,18 +418,14 @@ object ManifestReplica {
     * snapshot in the rename path). */
   def snapshot(spark: SparkSession, rows: Dataset[PersonRow], dir: String,
       numBuckets: Int = Replicate.DefaultNumBuckets): Unit =
-    snapshotWith(spark, dir, numBuckets, rowsAsSummaries(rows.toDF()),
-      pmod(col("id"), lit(numBuckets)).cast("int"))
+    snapshotWith(spark, Person, dir, numBuckets, rowsAsSummaries(rows.toDF()))
 
-  /** [[snapshot]] parameterized over the summary frame and bucket
-    * expression — the [[vacuumWith]] pattern, so the generic
-    * multi-table twin shares this exact monitor/stage/place/commit
-    * sequence instead of hand-copying it (r6 review). The generation
-    * is derived INSIDE the fold monitor: a re-snapshot over a live
-    * replica racing a fold could otherwise derive the same gen+1 and
-    * clobber the shared `.stage-g<gen>` dir. */
-  private[cdc] def snapshotWith(spark: SparkSession, dir: String,
-      numBuckets: Int, summaries: DataFrame, bucketExpr: Column): Unit = {
+  /** [[snapshot]] for any format, from rows already in summary form.
+    * The generation is derived INSIDE the fold monitor: a re-snapshot
+    * over a live replica racing a fold could otherwise derive the same
+    * gen+1 and clobber the shared `.stage-g<gen>` dir. */
+  private[cdc] def snapshotWith(spark: SparkSession, fmt: SummaryFormat,
+      dir: String, numBuckets: Int, summaries: DataFrame): Unit = {
     val (fs, root) = fsOf(spark, dir)
     withLifecycle(dir) {
     awaitCompactions(dir)
@@ -436,7 +435,7 @@ object ManifestReplica {
       val stage = new Path(root, s".stage-g$gen")
       writingTo(stage) {
         fs.delete(stage, true)
-        summaries.withColumn(BucketCol, bucketExpr)
+        summaries.withColumn(BucketCol, fmt.bucket(numBuckets))
           .repartition(numBuckets, col(BucketCol))
           .write.mode(SaveMode.Overwrite).partitionBy(BucketCol)
           .parquet(stage.toString)
@@ -472,11 +471,6 @@ object ManifestReplica {
   private val lifecycleOps =
     java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
 
-  /** Run a bulk lifecycle op (vacuum/truncate) with the per-dir flag
-    * held — shared with the generic multi-table twins. */
-  private[cdc] def lifecycleBusy(dir: String): Boolean =
-    lifecycleOps.contains(dir)
-
   /** Per-replica monitors serializing whole FOLD/REWRITE bodies
     * (compact, vacuum's rewrite) in-JVM. The commit itself is already
     * CAS-safe; this closes the narrower stage-dir hazard (r6 review):
@@ -492,6 +486,8 @@ object ManifestReplica {
   private[cdc] def foldLock(dir: String): Object =
     foldLocks.computeIfAbsent(dir, _ => new Object)
 
+  /** Run a bulk lifecycle op (snapshot/vacuum/truncate) with the
+    * per-dir flag held; a second concurrent one fails fast. */
   private[graft] def withLifecycle[A](dir: String)(body: => A): A = {
     check(lifecycleOps.add(dir), s"lifecycle op already in flight at $dir")
     try body finally lifecycleOps.remove(dir)
@@ -532,7 +528,17 @@ object ManifestReplica {
   def applyBatch(spark: SparkSession, batch: Dataset[PersonChange],
       dir: String, numBuckets: Int = Replicate.DefaultNumBuckets,
       batchId: Long, compactEvery: Int = Replicate.DefaultCompactEvery,
-      compactAsync: Boolean = false): Unit = {
+      compactAsync: Boolean = false): Unit =
+    applyDelta(spark, Person, batch.toDF(), dir, numBuckets, batchId,
+      compactEvery, compactAsync)
+
+  /** The manifest trigger body for one replica dir, any format: delta
+    * write, placement, one CAS commit, then the fold on threshold. A
+    * fold never STARTS while a lifecycle op (vacuum/truncate) holds the
+    * dir: it would read its base before that rewrite lands. */
+  private[cdc] def applyDelta(spark: SparkSession, fmt: SummaryFormat,
+      batch: DataFrame, dir: String, numBuckets: Int, batchId: Long,
+      compactEvery: Int, compactAsync: Boolean): Unit = {
     val (fs, root) = fsOf(spark, dir)
     // the WHOLE trigger body — replay pre-check included — sits on the
     // shared side of the per-dir RW lock (r6 review: a truncate —
@@ -548,7 +554,7 @@ object ManifestReplica {
         val tmp = new Path(root, s"delta/.tmp-$batchId")
         writingTo(tmp) {
         fs.delete(tmp, true)
-        summarizeBucketed(batch.toDF(), numBuckets)
+        fmt.summarizeBucketed(batch, numBuckets)
           .write.mode(SaveMode.Overwrite).parquet(tmp.toString)
         // placement + commit under the per-replica lock: a [[gc]] sweep
         // can then never interleave between the rename and the manifest
@@ -578,7 +584,7 @@ object ManifestReplica {
     }
     if (committed.deltas.size >= compactEvery &&
         !lifecycleOps.contains(dir)) {
-      if (!compactAsync) compact(spark, dir, numBuckets)
+      if (!compactAsync) compactWith(spark, fmt, dir, numBuckets)
       else if (!compacting.containsKey(dir)) {
         val t = new Thread(() => {
           // own scheduler pool so the fold's jobs time-slice with the
@@ -588,7 +594,7 @@ object ManifestReplica {
             "spark.scheduler.pool", "graft-compact")
           // bounded footprint: the background fold may hold at most
           // [[AsyncFoldMaxTasks]] slots at any instant (see its doc)
-          try compact(spark, dir, numBuckets,
+          try compactWith(spark, fmt, dir, numBuckets,
             maxTasks = Some(AsyncFoldMaxTasks))
           catch { case e: Throwable =>
             System.err.println(s"[cdc] async manifest compaction failed (deltas stay live, next trigger retries): $e")
@@ -607,6 +613,20 @@ object ManifestReplica {
     readAt(spark, dir, readManifest(fs, root)._2)
   }
 
+  /** The retained manifest `version`, or a clear error if it is gone.
+    * Open first, classify on failure: a membership check BEFORE the
+    * open would race a concurrent commit's history trim (time travel
+    * exists precisely for readers concurrent with a live writer). */
+  private[cdc] def manifestAt(spark: SparkSession, dir: String,
+      version: Long): Manifest = {
+    val (fs, root) = fsOf(spark, dir)
+    try readManifestAt(fs, root, version)
+    catch { case _: java.io.FileNotFoundException =>
+      throw new IllegalArgumentException(
+        s"manifest v$version not retained (have ${versions(spark, dir)})")
+    }
+  }
+
   /** Time travel: the replica as of manifest `version` — any version
     * still inside the [[ManifestHistory]] window (and not yet [[gc]]'d /
     * [[vacuum]]ed, which reclaim the named data files) resolves exactly
@@ -614,19 +634,8 @@ object ManifestReplica {
     * files an older manifest names. [[versions]] lists what is
     * available. */
   def readReplicaAt(spark: SparkSession, dir: String, version: Long)
-      : Dataset[PersonRow] = {
-    val (fs, root) = fsOf(spark, dir)
-    // open first, classify on failure: a membership check BEFORE the
-    // open would race a concurrent commit's history trim (time travel
-    // exists precisely for readers concurrent with a live writer)
-    val m =
-      try readManifestAt(fs, root, version)
-      catch { case _: java.io.FileNotFoundException =>
-        throw new IllegalArgumentException(
-          s"manifest v$version not retained (have ${versions(spark, dir)})")
-      }
-    readAt(spark, dir, m)
-  }
+      : Dataset[PersonRow] =
+    readAt(spark, dir, manifestAt(spark, dir, version))
 
   /** Change feed (the Delta CDF analog): every delta batch committed
     * AFTER manifest `sinceVersion`, as (batch_id, id, last_img,
@@ -638,16 +647,12 @@ object ManifestReplica {
     * precisely "id greater than v's highest committed id". */
   def changesSince(spark: SparkSession, dir: String, sinceVersion: Long)
       : DataFrame =
-    changesSinceWith(spark, dir, sinceVersion, BaseSchema, DeltaSchema)
+    changesSinceWith(spark, Person, dir, sinceVersion)
 
-  /** [[changesSince]] parameterized over the summary schema pair, so
-    * the multi-table generic replicas ([[ManifestMultiTable]]) serve
-    * the same feed without duplicating the gap-check/scan logic. */
-  private[cdc] def changesSinceWith(spark: SparkSession, dir: String,
-      sinceVersion: Long,
-      baseSchema: org.apache.spark.sql.types.StructType,
-      deltaSchema: org.apache.spark.sql.types.StructType): DataFrame = {
-    import org.apache.spark.sql.types.{LongType, StructField, StructType}
+  /** [[changesSince]] for any format. */
+  private[cdc] def changesSinceWith(spark: SparkSession, fmt: SummaryFormat,
+      dir: String, sinceVersion: Long): DataFrame = {
+    import org.apache.spark.sql.types.{LongType, StructField}
     val (fs, root) = fsOf(spark, dir)
     // highest committed id (watermark = highest compacted id), clamped:
     // a snapshot-only manifest carries the Long.MinValue watermark
@@ -656,12 +661,7 @@ object ManifestReplica {
     // starting at Long.MinValue+1
     def maxBatch(m: Manifest): Long =
       (m.deltas + m.watermark).max.max(-1L)
-    val since =
-      try maxBatch(readManifestAt(fs, root, sinceVersion))
-      catch { case _: java.io.FileNotFoundException =>
-        throw new IllegalArgumentException(
-          s"manifest v$sinceVersion not retained (have ${versions(spark, dir)})")
-      }
+    val since = maxBatch(manifestAt(spark, dir, sinceVersion))
     val (_, now) = readManifest(fs, root)
     // The committed ids after `since` are reconstructed EXACTLY from
     // the retained manifests, not assumed dense (r6 review: the
@@ -689,11 +689,9 @@ object ManifestReplica {
         }
       }
       .distinct.filter(id => id > since && id <= maxBatch(now)).sorted
-    val feedSchema = StructType(
-      StructField("batch_id", LongType) +: baseSchema.fields)
     if (ids.isEmpty)
-      spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], feedSchema)
+      emptyFrame(spark,
+        StructType(StructField("batch_id", LongType) +: fmt.baseSchema.fields))
     else {
       // ONE listing for the gap check and ONE partition-discovered scan
       // (the dirs are literally batch=<id>) — not N exists round-trips
@@ -706,12 +704,12 @@ object ManifestReplica {
       check(ids.forall(id => present.contains(s"batch=$id")),
         s"change feed gap: a committed batch in ($since, ${maxBatch(now)}] was reclaimed — lower the gc cadence or read from an earlier checkpoint")
       spark.read
-        .schema(StructType(deltaSchema.fields :+
+        .schema(StructType(fmt.deltaSchema.fields :+
           StructField("batch", LongType)))
         .option("basePath", deltaRoot.toString)
         .parquet(ids.map(now.deltaDir(dir, _)): _*)
         .select(col("batch").as("batch_id") +:
-          baseSchema.fieldNames.toSeq.map(col): _*)
+          fmt.baseSchema.fieldNames.toSeq.map(col): _*)
     }
   }
 
@@ -724,27 +722,31 @@ object ManifestReplica {
   private def readAt(spark: SparkSession, dir: String, m: Manifest)
       : Dataset[PersonRow] = {
     import spark.implicits._
-    val base =
-      if (m.buckets.isEmpty)
-        spark.createDataFrame(
-          spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], BaseSchema)
-      else spark.read.schema(BaseSchema)
-        .parquet(m.buckets.keys.toSeq.sorted.map(m.bucketDir(dir, _)): _*)
-    val folded =
-      if (m.deltas.isEmpty) base
-      else {
-        val deltas = spark.read.schema(DeltaSchema)
-          .parquet(m.deltas.toSeq.sorted.map(m.deltaDir(dir, _)): _*)
-          .select(BaseSchema.fieldNames.map(col).toSeq: _*)
-        combineSummaries(base.unionAll(deltas), Seq("id"))
-      }
-    projectAlive(folded).as[PersonRow]
+    projectAlive(foldAt(spark, Person, dir, m)).as[PersonRow]
   }
 
-  /** Fold pending deltas into new generations of ONLY the buckets they
-    * touch, then commit. Untouched buckets keep their generation (and
-    * their bytes). Consumed delta dirs and superseded generations are
-    * deleted only after the commit lands. */
+  /** Parquet dirs read with an explicit schema (empty frame if none). */
+  private def readDirs(spark: SparkSession, schema: StructType,
+      dirs: Seq[String]): DataFrame =
+    if (dirs.isEmpty) emptyFrame(spark, schema)
+    else spark.read.schema(schema).parquet(dirs: _*)
+
+  /** Merge-on-read, any format: the bucket generations and deltas `m`
+    * names → one commutative fold → one summary row per key. Shared by
+    * the current read and time travel. */
+  private[cdc] def foldAt(spark: SparkSession, fmt: SummaryFormat,
+      dir: String, m: Manifest): DataFrame = {
+    val base = readDirs(spark, fmt.baseSchema,
+      m.buckets.keys.toSeq.sorted.map(m.bucketDir(dir, _)))
+    if (m.deltas.isEmpty) base
+    else {
+      val deltas = spark.read.schema(fmt.deltaSchema)
+        .parquet(m.deltas.toSeq.sorted.map(m.deltaDir(dir, _)): _*)
+        .select(fmt.baseSchema.fieldNames.map(col).toSeq: _*)
+      combineSummaries(base.unionAll(deltas), fmt.keys(bucketed = false))
+    }
+  }
+
   /** Concurrent-task cap for BACKGROUND folds (r11 verdict #2): FAIR
     * pool weights share slots only as tasks FINISH — a 256-task merge
     * launched into a trigger gap grabs every free slot and the next
@@ -757,35 +759,39 @@ object ManifestReplica {
     * final folds) stay full-width — nothing contends with them. */
   val AsyncFoldMaxTasks = 8
 
+  /** Fold pending deltas into new generations of ONLY the buckets they
+    * touch, then commit. Untouched buckets keep their generation (and
+    * their bytes). Consumed delta dirs and superseded generations stay
+    * on disk until [[gc]]. */
   def compact(spark: SparkSession, dir: String,
       numBuckets: Int = Replicate.DefaultNumBuckets,
       maxTasks: Option[Int] = None): Unit =
+    compactWith(spark, Person, dir, numBuckets, maxTasks)
+
+  /** [[compact]] for any format. */
+  private[cdc] def compactWith(spark: SparkSession, fmt: SummaryFormat,
+      dir: String, numBuckets: Int, maxTasks: Option[Int] = None): Unit =
       foldLock(dir).synchronized {
     val (fs, root) = fsOf(spark, dir)
     val (_, m) = readManifest(fs, root)
     checkMod(m, numBuckets, "compact")
     if (m.deltas.isEmpty) return
-    val deltas = spark.read.schema(DeltaSchema)
+    val cols = fmt.deltaSchema.fieldNames.map(col).toSeq
+    val deltas = spark.read.schema(fmt.deltaSchema)
       .parquet(m.deltas.toSeq.sorted.map(m.deltaDir(dir, _)): _*)
     // bounded by numBuckets (thousands at 100 TB): driver-side is fine,
     // and it is read off the O(pending batches) deltas, never the base
     val touched = deltas.select(BucketCol).distinct()
       .collect().map(_.getInt(0)).toSeq.sorted
-    val baseTouched = {
-      val existing = touched.filter(m.buckets.contains)
-      if (existing.isEmpty)
-        spark.createDataFrame(
-          spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], BaseSchema)
-      else spark.read.schema(BaseSchema)
-        .parquet(existing.map(m.bucketDir(dir, _)): _*)
-    }
+    val baseTouched = readDirs(spark, fmt.baseSchema,
+      touched.filter(m.buckets.contains).map(m.bucketDir(dir, _)))
     val gen = m.gen + 1
     val merged = combineSummaries(
       baseTouched
-        .withColumn(BucketCol, pmod(col("id"), lit(numBuckets)).cast("int"))
-        .select(DeltaSchema.fieldNames.map(col).toSeq: _*)
-        .unionAll(deltas.select(DeltaSchema.fieldNames.map(col).toSeq: _*)),
-      Seq(BucketCol, "id"),
+        .withColumn(BucketCol, fmt.bucket(numBuckets))
+        .select(cols: _*)
+        .unionAll(deltas.select(cols: _*)),
+      fmt.keys(bucketed = true),
       width = Some(maxTasks.fold(touched.size.max(1))(c =>
         math.min(touched.size.max(1), c))))
     val stage = new Path(root, s".stage-g$gen")
@@ -831,35 +837,26 @@ object ManifestReplica {
     * fold. */
   def vacuum(spark: SparkSession, dir: String,
       numBuckets: Int = Replicate.DefaultNumBuckets): Unit =
-    vacuumWith(spark, dir, numBuckets, BaseSchema,
-      pmod(col("id"), lit(numBuckets)).cast("int"),
-      () => compact(spark, dir, numBuckets))
+    vacuumWith(spark, Person, dir, numBuckets)
 
-  /** [[vacuum]] parameterized over the summary schema and bucket
-    * expression, so the generic multi-table twin shares this exact
-    * stage/place/commit/prune/gc sequence instead of hand-copying the
-    * trickiest crash-window logic in the module (r6 review — the
-    * [[changesSinceWith]] pattern). `compactFn` folds pending deltas
-    * first (each caller's own compact). */
-  private[cdc] def vacuumWith(spark: SparkSession, dir: String,
-      numBuckets: Int,
-      baseSchema: org.apache.spark.sql.types.StructType,
-      bucketExpr: Column, compactFn: () => Unit): Unit = {
+  /** [[vacuum]] for any format. */
+  private[cdc] def vacuumWith(spark: SparkSession, fmt: SummaryFormat,
+      dir: String, numBuckets: Int): Unit = {
     withLifecycle(dir) {
       awaitCompactions(dir) // never rewrite under an in-flight async fold
       // the whole rewrite holds the fold monitor: a trigger fold that
       // raced the lifecycle flag parks until the rewrite commits, then
-      // re-reads the post-vacuum manifest (reentrant for compactFn)
+      // re-reads the post-vacuum manifest (reentrant for the fold)
       foldLock(dir).synchronized {
-      compactFn()
+      compactWith(spark, fmt, dir, numBuckets)
       val (fs, root) = fsOf(spark, dir)
       val (_, m) = readManifest(fs, root)
       checkMod(m, numBuckets, "vacuum")
       if (m.buckets.nonEmpty) {
-      val alive = spark.read.schema(baseSchema)
+      val alive = spark.read.schema(fmt.baseSchema)
         .parquet(m.buckets.keys.toSeq.sorted.map(m.bucketDir(dir, _)): _*)
         .filter(col("first_ins").isNotNull)
-        .withColumn(BucketCol, bucketExpr)
+        .withColumn(BucketCol, fmt.bucket(numBuckets))
         .repartition(numBuckets, col(BucketCol))
       val gen = m.gen + 1
       val stage = new Path(root, s".stage-g$gen")

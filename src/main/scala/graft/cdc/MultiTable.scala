@@ -1,8 +1,7 @@
 package graft.cdc
 
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
-import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.types._
@@ -33,21 +32,18 @@ final case class TableSpec(
   *    for every declared table at once. The per-trigger fan-out caches
   *    that parsed batch and filters per table; the raw text is scanned
   *    once no matter how many tables subscribe.
-  *  - **Schema-generic summary algebra.** [[Replicate]]'s per-key fold
-  *    needs only (a) an orderable image and (b) the key — so the
-  *    generic image is the envelope's column map AS A JSON STRING
-  *    (maps aren't orderable in Spark; strings are, and the struct
-  *    comparison orders by the unique `lsn` first so the img text is
-  *    never semantically compared). [[Replicate.combineSummaries]] is
-  *    already schema-generic and is reused verbatim; only the
-  *    batch-summarize and the final typed projection differ.
-  *  - **Same storage machinery.** Each table lives at
-  *    `<root>/<table>/` with [[Replicate]]'s exact layout: hash-bucket
-  *    partition dirs, hidden delta log, compaction watermark,
-  *    rename-aside swap, layout marker — all reused (`private[cdc]`),
-  *    so every crash-window argument in [[Replicate]]'s header carries
-  *    over unchanged. Buckets key on `pmod(hash(key), n)` (string keys;
-  *    production pins the hash function version with the layout).
+  *  - **One summary format.** The per-key fold needs only (a) an
+  *    orderable image and (b) the key, so every table is stored in
+  *    [[SummaryFormat.Generic]]: string key, the envelope's column map
+  *    as ONE JSON string, buckets on `pmod(hash(key), n)` (production
+  *    pins the hash function version with the layout).
+  *  - **One rename-aside core.** Each table lives at `<root>/<table>/`
+  *    and every storage operation — the trigger body
+  *    ([[Replicate.applyDelta]]), fold, vacuum, snapshot and
+  *    merge-on-read — is [[Replicate]]'s own, called with the generic
+  *    format, so every crash-window argument in [[Replicate]]'s header
+  *    holds per table. What is left here is parsing, the presence
+  *    check, the schema log and the typed projection.
   *  - **Typed projection at the edge.** [[readTable]] folds
   *    base ∪ deltas and only THEN parses the winning image's JSON once
   *    per surviving key, casting each field to `rowSchema`'s type —
@@ -60,27 +56,29 @@ final case class TableSpec(
   * module declared single-table. The per-trigger cost is one source
   * scan + one O(batch-slice) summary job per touched table. */
 object MultiTable {
-  import Replicate.{BucketCol, check, combineSummaries}
+  private val Generic = SummaryFormat.Generic
 
-  /** Generic delta schema: [[Replicate.DeltaSchema]] with the typed
-    * image replaced by (key STRING, img JSON-string). */
-  private[cdc] val MtDeltaSchema = StructType(Seq(
-    StructField(BucketCol, IntegerType),
-    StructField("key", StringType),
-    StructField("last_img", StructType(Seq(
-      StructField("lsn", LongType), StructField("img", StringType)))),
-    StructField("first_ins", StructType(Seq(
-      StructField("lsn", LongType),
-      StructField("created_at", TimestampType)))),
-    StructField("last_d_lsn", LongType)))
-
-  private[graft] val MtBaseSchema =
-    StructType(MtDeltaSchema.fields.filterNot(_.name == BucketCol))
+  /** Generic delta and base file schemas ([[SummaryFormat.Generic]]). */
+  private[cdc] val MtDeltaSchema = Generic.deltaSchema
+  private[graft] val MtBaseSchema = Generic.baseSchema
 
   val DefaultNumBuckets = 8
 
-  private def tableDir(root: String, spec: TableSpec): String =
+  /** One declared table's replica dir under a multi-table root. */
+  private[cdc] def tableDir(root: String, spec: TableSpec): String =
     s"$root/${spec.table}"
+
+  /** One table's rows of a parsed generic batch. */
+  private[cdc] def sliceOf(parsed: DataFrame, spec: TableSpec): DataFrame =
+    parsed.filter(col("tbl") === spec.table).drop("tbl")
+
+  /** A per-row value chosen by the row's table (key and created_at
+    * column NAMES can differ per table). */
+  private def dispatch(specs: Seq[TableSpec])(f: TableSpec => Column)
+      : Column =
+    specs.foldLeft(lit(null).cast(StringType)) { (acc, sp) =>
+      when(col("tbl") === sp.table, f(sp)).otherwise(acc)
+    }
 
   /** Decode raw wal2json lines into generic change rows for ALL declared
     * tables in one narrow codegen'd stage: no shuffle, no per-table
@@ -90,10 +88,6 @@ object MultiTable {
     * resolve through a table-dispatched when-chain. */
   def parseAll(lines: DataFrame, specs: Seq[TableSpec]): DataFrame = {
     import Wal2JsonSchema._
-    def dispatch(f: TableSpec => org.apache.spark.sql.Column) =
-      specs.foldLeft(lit(null).cast(StringType)) { (acc, sp) =>
-        when(col("tbl") === sp.table, f(sp)).otherwise(acc)
-      }
     lines
       .select(from_json(col("value"), envelope).as("c"))
       .filter(col("c").isNotNull && col("c.action").isin("I", "U", "D"))
@@ -108,10 +102,10 @@ object MultiTable {
           .as("ident"))
       .select(
         col("tbl"), col("lsn"), col("action"),
-        dispatch(sp => coalesce(element_at(col("cols"), sp.keyCol),
+        dispatch(specs)(sp => coalesce(element_at(col("cols"), sp.keyCol),
           element_at(col("ident"), sp.keyCol))).as("key"),
         to_json(col("cols")).as("img"),
-        to_timestamp(dispatch(sp => sp.createdAtCol
+        to_timestamp(dispatch(specs)(sp => sp.createdAtCol
             .map(c => element_at(col("cols"), c))
             .getOrElse(lit(null).cast(StringType))), tsFormat)
           .as("created_at"))
@@ -138,10 +132,6 @@ object MultiTable {
         StructField("lsn", LongType),
         StructField("schema", StringType),
         StructField("table", StringType))))))
-    def dispatch(f: TableSpec => org.apache.spark.sql.Column) =
-      specs.foldLeft(lit(null).cast(StringType)) { (acc, sp) =>
-        when(col("tbl") === sp.table, f(sp)).otherwise(acc)
-      }
     lines
       .select(from_json(col("value"), env).as("e"))
       .filter(col("e").isNotNull &&
@@ -156,39 +146,19 @@ object MultiTable {
         col("e.after").as("cols"), col("e.before").as("ident"))
       .select(
         col("tbl"), col("lsn"), col("action"),
-        dispatch(sp => coalesce(element_at(col("cols"), sp.keyCol),
+        dispatch(specs)(sp => coalesce(element_at(col("cols"), sp.keyCol),
           element_at(col("ident"), sp.keyCol))).as("key"),
         to_json(col("cols")).as("img"),
-        timestamp_micros(dispatch(sp => sp.createdAtCol
+        timestamp_micros(dispatch(specs)(sp => sp.createdAtCol
             .map(c => element_at(col("cols"), c))
             .getOrElse(lit(null).cast(StringType))).cast(LongType))
           .as("created_at"))
       .filter(col("key").isNotNull)
   }
 
-  /** [[Replicate.summarizeBucketed]] over the generic change shape: one
-    * batch-sized shuffle keyed on the hash bucket feeds the window, the
-    * aggregate, and the bucket-partitioned delta write. */
-  private[cdc] def summarizeMt(batch: DataFrame, numBuckets: Int): DataFrame = {
-    val byKey = Window.partitionBy(BucketCol, "key")
-    val afterD = col("lsn") > coalesce(col("last_d_lsn"), lit(Long.MinValue))
-    batch
-      .withColumn(BucketCol, pmod(hash(col("key")), lit(numBuckets)))
-      .repartition(col(BucketCol))
-      .withColumn("last_d_lsn",
-        max(when(col("action") === "D", col("lsn"))).over(byKey))
-      .groupBy(BucketCol, "key")
-      .agg(
-        max(when(col("action") =!= "D" && afterD,
-          struct(col("lsn"), col("img")))).as("last_img"),
-        min(when(col("action") === "I" && afterD,
-          struct(col("lsn"), col("created_at")))).as("first_ins"),
-        max(col("last_d_lsn")).as("last_d_lsn"))
-  }
-
   /** Lift typed rows into generic summary form for the initial
     * [[snapshot]] (lsn 0 — outranked by every real change). */
-  private[cdc] def rowsAsMtSummaries(rows: DataFrame, spec: TableSpec)
+  private[graft] def rowsAsMtSummaries(rows: DataFrame, spec: TableSpec)
       : DataFrame = {
     val imgMap = map(spec.rowSchema.fields.flatMap(f =>
       Seq(lit(f.name), col(f.name).cast(StringType))).toSeq: _*)
@@ -201,40 +171,15 @@ object MultiTable {
       lit(null).cast(LongType).as("last_d_lsn"))
   }
 
-  /** Bulk-load one table's initial state (full overwrite). Registers
-    * as a lifecycle op so a concurrent vacuum/truncate FAILS FAST
-    * instead of silently queueing behind the write lock and deleting
-    * the freshly loaded state (r6 review); joins the dir's async fold
-    * BEFORE acquiring exclusive (joining while holding the write lock
-    * deadlocks on a fold parked on the shared side). */
+  /** Bulk-load one table's initial state (full overwrite) —
+    * [[Replicate.snapshotWith]] over the generic format. */
   def snapshot(spark: SparkSession, rows: DataFrame, root: String,
-      spec: TableSpec, numBuckets: Int = DefaultNumBuckets): Unit = {
-    val dir = tableDir(root, spec)
-    Replicate.withLifecycle(dir) {
-    Replicate.awaitCompactions(dir)
-    Replicate.exclusive(dir) {
-      val (fs, base) = {
-        val p = new Path(dir)
-        (p.getFileSystem(spark.sparkContext.hadoopConfiguration), p)
-      }
-      Replicate.truncateLocked(spark, dir)
-      rowsAsMtSummaries(rows, spec)
-        .withColumn(BucketCol, pmod(hash(col("key")), lit(numBuckets)))
-        .write.mode(SaveMode.Overwrite)
-        .option("partitionOverwriteMode", "static")
-        .partitionBy(BucketCol)
-        .parquet(dir)
-      Replicate.checkLayout(fs, base, numBuckets)
-    }
-    }
-  }
+      spec: TableSpec, numBuckets: Int = DefaultNumBuckets): Unit =
+    Replicate.snapshotWith(spark, Generic, tableDir(root, spec), numBuckets,
+      rowsAsMtSummaries(rows, spec))
 
-  /** Apply one micro-batch of PARSED generic changes to every declared
-    * table's replica: filter the (cached) batch per table, summarize,
-    * commit as that table's delta `batch=<id>`, compact on threshold —
-    * [[Replicate.applyBatch]]'s exact dataflow per table, idempotent
-    * under replay for the same reasons. Tables absent from the batch
-    * are SKIPPED entirely — one bounded `groupBy(tbl)` over the cached
+  /** Tables present in a parsed batch. Tables absent from it are
+    * SKIPPED entirely — one bounded `groupBy(tbl)` over the cached
     * parse decides presence, so an idle table costs no summarize job,
     * no empty delta dir (which would count toward `compactEvery` and
     * periodically fold nothing), and — on the manifest twin — no burned
@@ -245,6 +190,15 @@ object MultiTable {
   private[cdc] def presentTables(parsed: DataFrame): Set[String] =
     parsed.select("tbl").distinct().collect().map(_.getString(0)).toSet
 
+  /** Apply one micro-batch of PARSED generic changes to every declared
+    * table's replica: [[Replicate.applyDelta]] once per table over the
+    * cached batch, with the synchronous fold — idempotent under replay
+    * for the same reasons as [[Replicate.applyBatch]]. Crash recovery
+    * runs for EVERY declared table with an existing replica, traffic or
+    * not (r6 review: gating it on presence left a crashed bucket swap on
+    * a then-idle table serving incomplete reads until its next write —
+    * recoverSwap is one cheap LIST); only the delta write is gated on
+    * presence. */
   def applyBatch(spark: SparkSession, parsed: DataFrame, root: String,
       specs: Seq[TableSpec], batchId: Long,
       numBuckets: Int = DefaultNumBuckets,
@@ -253,160 +207,66 @@ object MultiTable {
     try {
       val present = presentTables(parsed)
       specs.foreach { spec =>
-      val dir = tableDir(root, spec)
-      val base = new Path(dir)
-      val fs = base.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      val active = present.contains(spec.table)
-      // crash recovery runs for EVERY declared table with an existing
-      // replica, traffic or not (r6 review: gating it on presence left
-      // a crashed bucket swap on a then-idle table serving incomplete
-      // reads until its next write — recoverSwap is one cheap LIST);
-      // only the write path is gated on presence. While a lifecycle op
-      // (vacuum) holds the table, recovery must NOT run: the op's own
-      // rename-aside swaps are live, not crash leftovers (r6 review).
-      // whole per-table trigger section under the SHARED side of the
-      // dir lock: recovery, delta write/commit, and the threshold fold
-      // cannot interleave an exclusive lifecycle rewrite, and never
-      // contend with each other (r6 review)
-      Replicate.shared(dir) {
-      if (active || fs.exists(base)) {
-        if (!Replicate.lifecycleBusy(dir)) {
-          Replicate.checkLayout(fs, base, numBuckets)
-          Replicate.recoverSwap(fs, base)
-        }
-      }
-      if (active) {
-      val dRoot = new Path(base, Replicate.DeltaDirName)
-      val tmp = new Path(dRoot, s".tmp-$batchId")
-      fs.delete(tmp, true)
-      summarizeMt(parsed.filter(col("tbl") === spec.table)
-        .drop("tbl"), numBuckets)
-        .write.mode(SaveMode.Overwrite).parquet(tmp.toString)
-      val dst = new Path(dRoot, s"batch=$batchId")
-      fs.delete(dst, true)
-      check(fs.rename(tmp, dst), s"commit delta $dst")
-      val entries = fs.listStatus(dRoot)
-      entries.iterator.filter(_.getPath.getName.startsWith(".tmp-"))
-        .foreach(e => fs.delete(e.getPath, true))
-      val wm = Replicate.readWatermark(fs, dRoot)
-      val (stale, live) = entries.iterator.map(_.getPath)
-        .filter(_.getName.startsWith("batch=")).toSeq
-        .partition(Replicate.batchIdOf(_) <= wm)
-      stale.foreach(p => fs.delete(p, true))
-      if (live.size >= compactEvery && !Replicate.lifecycleBusy(dir))
-        compactUnlocked(spark, dir, numBuckets)
-      }
-      }
+        Replicate.applyDelta(spark, Generic,
+          if (present.contains(spec.table)) Some(sliceOf(parsed, spec))
+          else None,
+          tableDir(root, spec), numBuckets, batchId, compactEvery,
+          compactAsync = false)
       }
     } finally parsed.unpersist()
   }
 
-  /** Fold one table's pending deltas into the buckets they touch —
-    * [[Replicate.compact]]'s incremental shape over the generic
-    * schema. Operator entry: exclusive on the dir lock (an unguarded
-    * public compact racing the trigger's would share the staging
-    * dir). */
+  /** Fold one table's pending deltas into the buckets they touch.
+    * Operator entry: exclusive on the dir lock (an unguarded public
+    * compact racing the trigger's would share the staging dir). */
   def compact(spark: SparkSession, dir: String,
       numBuckets: Int = DefaultNumBuckets): Unit =
-    Replicate.exclusive(dir) { compactUnlocked(spark, dir, numBuckets) }
-
-  private[cdc] def compactUnlocked(spark: SparkSession, dir: String,
-      numBuckets: Int = DefaultNumBuckets): Unit = {
-    val base = new Path(dir)
-    val fs = base.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val deltaDirs = Replicate.listDeltas(
-      fs, new Path(base, Replicate.DeltaDirName))
-    if (deltaDirs.isEmpty) return
-    val deltas = spark.read.schema(MtDeltaSchema)
-      .parquet(deltaDirs.map(_.toString): _*)
-      .select(MtDeltaSchema.fieldNames.map(col).toSeq: _*)
-    val touched = deltas.select(BucketCol).distinct()
-      .collect().map(_.getInt(0)).toSet
-    val baseDf = Replicate.readBase(spark, fs, dir, Some(touched),
-      schema = MtBaseSchema)
-      .withColumn(BucketCol, pmod(hash(col("key")), lit(numBuckets)))
-      .select(MtDeltaSchema.fieldNames.map(col).toSeq: _*)
-    val merged = combineSummaries(baseDf.unionAll(deltas),
-      Seq(BucketCol, "key"), width = Some(touched.size.max(1)))
-    Replicate.writeAndSwap(fs, base, dir, merged, dropAbsent = false)
-    Replicate.writeWatermark(fs, new Path(base, Replicate.DeltaDirName),
-      deltaDirs.map(Replicate.batchIdOf).max)
-    deltaDirs.foreach(d => fs.delete(d, true))
-  }
-
-  /** Physically remove one table's tombstones — [[Replicate.vacuum]]
-    * over the generic schema (same precondition: the source can no
-    * longer deliver lsns below the tombstones' delete lsns). Pending
-    * deltas fold first; live buckets are rewritten alive-keys-only via
-    * the same rename-aside swap; all-tombstone buckets drop outright. */
-  def vacuum(spark: SparkSession, root: String, spec: TableSpec,
-      numBuckets: Int = DefaultNumBuckets): Unit = {
-    val dir = tableDir(root, spec)
-    // the lifecycle flag stops a concurrent trigger's recoverSwap from
-    // tearing our rename-aside swaps apart mid-flight (the multi-table
-    // stream recovers EVERY declared table each trigger, idle or not)
-    // and from folding a base read that predates this rewrite
-    Replicate.withLifecycle(dir) {
-      Replicate.exclusive(dir) {
-        val base = new Path(dir)
-        val fs = base.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        Replicate.checkLayout(fs, base, numBuckets)
-        Replicate.recoverSwap(fs, base)
-        compactUnlocked(spark, dir, numBuckets)
-        val alive = Replicate.readBase(spark, fs, dir,
-          schema = MtBaseSchema)
-          .filter(col("first_ins").isNotNull)
-          .withColumn(BucketCol, pmod(hash(col("key")), lit(numBuckets)))
-          .repartition(numBuckets, col(BucketCol))
-        Replicate.writeAndSwap(fs, base, dir, alive, dropAbsent = true)
-      }
+    Replicate.exclusive(dir) {
+      Replicate.compact(spark, Generic, dir, numBuckets)
     }
-  }
+
+  /** Physically remove one table's tombstones — [[Replicate.vacuumWith]]
+    * over the generic format (same precondition: the source can no
+    * longer deliver lsns below the tombstones' delete lsns). */
+  def vacuum(spark: SparkSession, root: String, spec: TableSpec,
+      numBuckets: Int = DefaultNumBuckets): Unit =
+    Replicate.vacuumWith(spark, Generic, tableDir(root, spec), numBuckets)
 
   /** Drop one table's replica entirely (S9) — [[Replicate.truncate]]
     * on its root (schema-independent). */
   def truncate(spark: SparkSession, root: String, spec: TableSpec): Unit =
     Replicate.truncate(spark, tableDir(root, spec))
 
-  /** Merge-on-read view of one table, projected to its typed schema:
-    * fold base ∪ pending deltas, keep live keys, parse each surviving
-    * image's JSON once and cast per the declared schema. */
+  /** Merge-on-read view of one table, projected to its typed schema. */
   def readTable(spark: SparkSession, root: String, spec: TableSpec)
-      : DataFrame = {
-    val dir = tableDir(root, spec)
-    val base = new Path(dir)
-    val fs = base.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val baseDf = Replicate.readBase(spark, fs, dir, schema = MtBaseSchema)
-    val deltaDirs = Replicate.listDeltas(
-      fs, new Path(base, Replicate.DeltaDirName))
-    val folded =
-      if (deltaDirs.isEmpty) baseDf
-      else {
-        val deltas = spark.read.schema(MtDeltaSchema)
-          .parquet(deltaDirs.map(_.toString): _*)
-          .select(MtBaseSchema.fieldNames.map(col).toSeq: _*)
-        combineSummaries(baseDf.unionAll(deltas), Seq("key"))
-      }
-    projectTyped(folded, spec)
-  }
+      : DataFrame =
+    projectTyped(Replicate.foldedView(spark, Generic, tableDir(root, spec)),
+      spec)
 
   /** Live-rows typed projection over folded generic summaries: parse
     * each surviving key's winning image JSON once, cast per the
-    * declared schema. Shared by both commit protocols. */
+    * declared schema — O(live keys), not O(events). Shared by both
+    * commit protocols. */
   private[cdc] def projectTyped(folded: DataFrame, spec: TableSpec)
-      : DataFrame = {
-    val m = from_json(col("last_img.img"),
-      MapType(StringType, StringType)).as("m")
+      : DataFrame =
     folded.filter(col("first_ins").isNotNull)
-      .select(col("key"), m, col("first_ins.created_at").as("__cat"))
-      .select(spec.rowSchema.fields.map { f =>
-        if (f.name == spec.keyCol)
-          col("key").cast(f.dataType).as(f.name)
-        else if (spec.createdAtCol.contains(f.name))
-          col("__cat").cast(f.dataType).as(f.name)
-        else element_at(col("m"), f.name).cast(f.dataType).as(f.name)
-      }.toSeq: _*)
-  }
+      .select(col("key"), imageMap, col("first_ins.created_at").as("__cat"))
+      .select(typedColumns(spec): _*)
+
+  /** The winning image's column map, as column `m`. */
+  private[cdc] def imageMap: Column =
+    from_json(col("last_img.img"), MapType(StringType, StringType)).as("m")
+
+  /** The declared row, cast field by field from `key`, `m` (the image
+    * map) and `__cat` (the first insert's created_at). */
+  private[cdc] def typedColumns(spec: TableSpec): Seq[Column] =
+    spec.rowSchema.fields.map { f =>
+      if (f.name == spec.keyCol)
+        col("key").cast(f.dataType).as(f.name)
+      else if (spec.createdAtCol.contains(f.name))
+        col("__cat").cast(f.dataType).as(f.name)
+      else element_at(col("m"), f.name).cast(f.dataType).as(f.name)
+    }.toSeq
 
   // ---- declared-schema version log (r7 verdict #5) ---------------------
 
@@ -426,7 +286,7 @@ object MultiTable {
   def recordSchema(spark: SparkSession, root: String,
       spec: TableSpec): Int = {
     val dir = schemaLogDir(root, spec.table)
-    val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val (fs, _) = Replicate.fsOf(spark, dir.toString)
     fs.mkdirs(dir)
     schemaVersions(spark, root, spec.table).lastOption match {
       case Some((v, s)) if s == spec.rowSchema => v
@@ -482,7 +342,7 @@ object MultiTable {
   def schemaVersions(spark: SparkSession, root: String, table: String)
       : Seq[(Int, StructType)] = {
     val dir = schemaLogDir(root, table)
-    val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val (fs, _) = Replicate.fsOf(spark, dir.toString)
     if (!fs.exists(dir)) Seq.empty
     else fs.listStatus(dir).toSeq.map(_.getPath.getName)
       .collect { case n if n.startsWith("v") && n.endsWith(".json") =>

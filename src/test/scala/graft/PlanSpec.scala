@@ -370,30 +370,29 @@ class PlanSpec extends AnyFunSuite {
       s"pii scrub grew an aggregate:\n${s.take(600)}")
   }
 
-  test("CDC compaction fold: one bucket exchange, no join — union feeds window, agg, write") {
-    import java.sql.Timestamp
-    import org.apache.spark.sql.functions.{col, lit, pmod}
-    import graft.cdc.{PersonChange, PersonRow, Replicate}
-    import spark.implicits._
-    val t0 = Timestamp.valueOf("2026-01-01 00:00:00")
-    val changes = (1 to 100).map(i => PersonChange(100L + i, "I", i,
-      Some(s"n$i"), Some(s"u$i"), Some(i), Some(t0))).toDS()
-    val dir = java.nio.file.Files.createTempDirectory("plan-cdc").toString
-    Replicate.summarizeBucketed(changes.toDF(), 4)
-      .write.parquet(s"$dir/delta")
-    val cols = Seq(Replicate.BucketCol, "id", "last_img", "first_ins",
+  /** The compaction fold over bucketed deltas ∪ bucket-stamped base
+    * summaries, executed; returns the final (adaptive) plan string. */
+  private def foldPlan(deltas: org.apache.spark.sql.DataFrame,
+      base: org.apache.spark.sql.DataFrame, key: String): String = {
+    import org.apache.spark.sql.functions.col
+    import graft.cdc.Replicate
+    val cols = Seq(Replicate.BucketCol, key, "last_img", "first_ins",
       "last_d_lsn")
-    val deltas = spark.read.parquet(s"$dir/delta")
-      .select(cols.map(col): _*)
-    val base = Replicate.rowsAsSummaries(
-        (1 to 50).map(i => PersonRow(i, s"n$i", s"u$i", i, t0)).toDS().toDF())
-      .withColumn(Replicate.BucketCol, pmod(col("id"), lit(4)).cast("int"))
-      .select(cols.map(col): _*)
-    val merged = Replicate.combineSummaries(base.unionAll(deltas),
-      Seq(Replicate.BucketCol, "id"), width = Some(4))
+    val dir = java.nio.file.Files.createTempDirectory("plan-cdc").toString
+    deltas.write.parquet(s"$dir/delta")
+    val merged = Replicate.combineSummaries(
+      base.select(cols.map(col): _*)
+        .unionAll(spark.read.parquet(s"$dir/delta").select(cols.map(col): _*)),
+      Seq(Replicate.BucketCol, key), width = Some(4))
     val qe = merged.queryExecution
     qe.executedPlan.execute().foreach(_ => ())
-    val s = qe.executedPlan.toString
+    qe.executedPlan.toString
+  }
+
+  /** No join, and exactly the one explicit bucket repartition: window,
+    * aggregate, and the bucket-partitioned write all reuse it — a
+    * second exchange would spray buckets across write tasks. */
+  private def assertOneBucketExchange(s: String): Unit = {
     // AQE's string repeats the tree under "== Initial Plan ==" — count
     // only the final (executed) section
     val finalPlan = s.split("== Initial Plan ==").head
@@ -401,10 +400,37 @@ class PlanSpec extends AnyFunSuite {
       s"compaction fold must not plan a join:\n$s")
     val exchanges = finalPlan.linesIterator
       .count(_.contains("Exchange hashpartitioning"))
-    // exactly the one explicit bucket repartition: window, aggregate,
-    // and the bucket-partitioned write all reuse it — a second exchange
-    // would spray buckets across write tasks
     assert(exchanges <= 1, s"unexpected extra exchange:\n$s")
+  }
+
+  test("CDC compaction fold: one bucket exchange, no join — union feeds window, agg, write") {
+    import java.sql.Timestamp
+    import org.apache.spark.sql.functions.{col, lit, pmod}
+    import graft.cdc.{ChangeGen, MultiTable, PersonChange, PersonRow,
+      Replicate, SummaryFormat}
+    import spark.implicits._
+    val t0 = Timestamp.valueOf("2026-01-01 00:00:00")
+    // the typed person format
+    val changes = (1 to 100).map(i => PersonChange(100L + i, "I", i,
+      Some(s"n$i"), Some(s"u$i"), Some(i), Some(t0))).toDS()
+    val rows = (1 to 50).map(i => PersonRow(i, s"n$i", s"u$i", i, t0)).toDS()
+    assertOneBucketExchange(foldPlan(
+      Replicate.summarizeBucketed(changes.toDF(), 4),
+      Replicate.rowsAsSummaries(rows.toDF())
+        .withColumn(Replicate.BucketCol, pmod(col("id"), lit(4)).cast("int")),
+      "id"))
+    // the generic format every multi-table replica stores: string key,
+    // JSON image, hash bucket
+    val parsed = MultiTable.parseAll(
+      ChangeGen.ops(seed = 9L, n = 200).map(ChangeGen.toJsonLine).toDF("value"),
+      MtTestSpecs.both)
+    val generic = SummaryFormat.Generic
+    assertOneBucketExchange(foldPlan(
+      generic.summarizeBucketed(
+        parsed.filter(col("tbl") === "person").drop("tbl"), 4),
+      MultiTable.rowsAsMtSummaries(rows.toDF(), MtTestSpecs.person)
+        .withColumn(Replicate.BucketCol, generic.bucket(4)),
+      "key"))
   }
 
   test("SRP bucket signatures are computed shuffle-free") {
